@@ -3,9 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Regenerates PLANS.md: the physical plans of the load-bearing queries,
-  * with the plan properties that matter at 100 TB called out. Run:
+/** Plan evidence on sf0.001 (plan SHAPE is scale-independent).
+  *
+  * With no arguments, regenerates PLANS.md: the physical plans of the
+  * load-bearing queries, with the plan properties that matter at 100 TB
+  * called out.
   *   sbt -batch "runMain graft.PlanDump"
+  *
+  * With arguments, writes `<outDir>/<query>_<suffix>.txt` holding the
+  * `.explain("formatted")` output of each named query, so before/after
+  * plan-shape claims are checkable without running Spark. Eager queries
+  * (q19/q40) localize their results — their returned frame's plan is the
+  * localized scan.
+  *   sbt -batch "runMain graft.PlanDump plans/r08 after q41_jaccard_join"
   */
 object PlanDump {
 
@@ -28,6 +38,7 @@ object PlanDump {
     "q42_byte_weighted_route" -> "byte-weighted placement itself is ONE hash exchange on the precomputed __bw_route column (element_at over driver-side literal maps — no RDD partitioner); the stats pass is a persisted per-url groupBy (its own url-keyed exchange, shuffling only the distinct-url cost map, paid once across the stats head() and the heavy collect()); both extraction variants are independent mapPartitions pipelines meeting in the verify full-outer join.")
 
   def main(args: Array[String]): Unit = {
+    require(args.length != 1, "usage: PlanDump [<outDir> <suffix> <query>...]")
     // plan dump inspects operator plans, not verification I/O
     graft.queries.Queries.auxDumpEnabled = false
     val spark = SparkSession.builder()
@@ -37,6 +48,22 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
+    if (args.isEmpty) writePlansMd(spark, sf)
+    else {
+      val outDir = args(0)
+      val suffix = args(1)
+      Files.createDirectories(Paths.get(outDir))
+      args.drop(2).foreach { name =>
+        val txt = SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+        println(s"PLAN_OK $name ${txt.length}")
+      }
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, sf: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the load-bearing queries\n\n")
     sb.append("Generated by `graft.PlanDump` on sf0.001 (plan SHAPE is scale-\n")
@@ -62,6 +89,5 @@ object PlanDump {
     sb.append("\n```\n")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("PLANS_OK " + sb.length)
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.pipeline.ExtractPipeline
@@ -111,16 +111,20 @@ object Queries {
         .digest(s"${i}_$p".getBytes("UTF-8"))
       if (((d(0) >> 4) & 0xf) < 8) 1L else -1L
     }
-    def sBit(p: Int) =
-      s"(CASE WHEN dot_i64(qv, array(${weights(p).map(_ + "L").mkString(", ")})) >= 0 THEN '1' ELSE '0' END)"
+    def sBit(p: Int): Column =
+      when(GraftFunctions.dot_i64(col("qv"), array(weights(p).map(lit): _*)) >= 0, "1")
+        .otherwise("0")
     def dBit(p: Int) =
       "(CASE WHEN list_sum(list_transform(generate_series(1, 64), i -> qv[i] * " +
         s"(CASE WHEN substr(md5(CAST(i AS VARCHAR) || '_$p'), 1, 1) < '8' THEN 1 ELSE -1 END))) " +
         ">= 0 THEN '1' ELSE '0' END)"
     private def planes(t: Int) = bitsPerTable * t until bitsPerTable * (t + 1)
-    def sTable(t: Int) = planes(t).map(sBit).mkString("concat(", ", ", ")")
+    def sTable(t: Int): Column = concat(planes(t).map(sBit): _*)
     def dTable(t: Int) = planes(t).map(dBit).mkString(" || ")
-    val sTabs: Seq[String] = (0 until nTables).map(t => s"${sTable(t)} AS b$t")
+    // lazy: built at object init, these Columns load Catalyst's
+    // expression machinery before any session exists (Queries init went
+    // from 0.37 s to 1.6 s on a 4-core host)
+    lazy val sTabs: Seq[Column] = (0 until nTables).map(t => sTable(t).as(s"b$t"))
     val dTabs: String = (0 until nTables).map(t => s"${dTable(t)} AS b$t").mkString(", ")
     val sStack: String =
       (0 until nTables).map(t => s"$t, b$t").mkString(s"stack($nTables, ", ", ", ") AS (tbl, bucket)")
@@ -167,13 +171,6 @@ object Queries {
     off
   }
 
-  /** Bounded per-query cache of persisted INTERMEDIATES: a re-invocation
-    * (repeated bench sweeps) unpersists the previous generation, so at
-    * most one live copy per query key exists in the session. Spark does
-    * not share work between the two sides of a self-join — persisting the
-    * expensive projection (shingle/signature/bit tables) makes each side
-    * a cache read instead of a recompute, which at 100 TB is exactly the
-    * materialized signature table a dedup/ANN job writes once. */
   /** max(vec_id) of the embeddings table, one job per (session, dir) —
     * a fail-loud collision guard, not a result cache. WEAK-keyed on the
     * session itself (round-4 ADVICE: an identityHashCode key can collide
@@ -215,26 +212,46 @@ object Queries {
   private def embeddingsCount(s: SparkSession, dir: String): Long =
     sessionMemo(RowGuard, s, dir)(t(s, dir, "embeddings").count())
 
+  /** Bounded per-query cache of persisted INTERMEDIATES: a re-invocation
+    * (repeated bench sweeps) unpersists the previous generation, so at
+    * most one live copy per query key exists in the session. Spark does
+    * not share work between the two sides of a self-join — persisting the
+    * expensive projection (shingle/signature/bit tables) makes each side
+    * a cache read instead of a recompute, which at 100 TB is exactly the
+    * materialized signature table a dedup/ANN job writes once. */
   private object SwapCache {
-    private var last: Map[String, List[DataFrame]] = Map.empty
-    def swap(key: String)(dfs: DataFrame*): Unit = synchronized {
-      last.getOrElse(key, Nil).foreach(d => scala.util.Try(d.unpersist(false)))
-      last = last.updated(key, dfs.toList)
+    private var live: Map[String, List[Dataset[_]]] = Map.empty
+
+    /** Persists frames of one generation, each owned from the moment it
+      * is persisted — a body that throws after its first persist leaves
+      * nothing unowned behind. */
+    final class Keep private[SwapCache] (key: String) {
+      def apply[T](ds: Dataset[T]): Dataset[T] = SwapCache.synchronized {
+        val cached = ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        live = live.updated(key, cached :: live.getOrElse(key, Nil))
+        cached
+      }
     }
-    /** MUST be called BEFORE the new generation's persist() calls, not
-      * after: a re-invocation on the same dir builds plans IDENTICAL to
-      * the cached generation's, so CacheManager dedups the new persist
-      * into the OLD entry ("Asked to cache already cached data") — and a
-      * swap() after the fact then uncaches that shared entry BY PLAN,
+
+    /** Opens a new generation of `key`: the previous generation is
+      * unpersisted FIRST, before any of the new persists. A re-invocation
+      * on the same dir builds plans IDENTICAL to the cached generation's,
+      * so CacheManager would dedup a new persist into the OLD entry
+      * ("Asked to cache already cached data") — and unpersisting the old
+      * generation after the fact would uncache that shared entry BY PLAN,
       * leaving the new generation completely uncached and every consumer
       * recomputing the full chain (measured: q41 re-runs went 4.4 s ->
       * 40 s). Release-first keeps each generation's cache entries
       * disjoint; the re-build cost between generations is paid, which is
-      * the swap contract anyway. */
-    def release(key: String): Unit = swap(key)()
+      * the generation contract anyway. */
+    def generation(key: String): Keep = synchronized {
+      live.getOrElse(key, Nil).foreach(d => scala.util.Try(d.unpersist(false)))
+      live = live - key
+      new Keep(key)
+    }
     def releaseAll(blocking: Boolean): Unit = synchronized {
-      last.values.flatten.foreach(d => scala.util.Try(d.unpersist(blocking)))
-      last = Map.empty
+      live.values.flatten.foreach(d => scala.util.Try(d.unpersist(blocking)))
+      live = Map.empty
     }
   }
 
@@ -783,10 +800,7 @@ object Queries {
           require(mOff == 1000000L,
             s"q15 oracle domain exceeded: offset=$mOff (static oracle SQL " +
               "assumes +1000000; verify runs need doc ids < 1000000)")
-        // release-first (SwapCache.release scaladoc): persisting a plan
-        // identical to the previous generation's would dedup into the old
-        // CacheManager entry that swap() then kills
-        SwapCache.release("q15")
+        val keep = SwapCache.generation("q15")
         val base = t(s, dir, "documents").selectExpr("doc_id AS id", s"$SparkToks AS toks")
         // the shingle+hash pipeline feeds the band explode AND both sides
         // of the jaccard join — persist it once instead of recomputing the
@@ -795,11 +809,10 @@ object Queries {
         // sz rides in the persisted projection: the confirm stage derives
         // the union size as sz_a + sz_b - overlap (exact — sh is an
         // array_distinct output), so the per-pair array_union pass is gone
-        val augCached = base.unionByName(
+        val augCached = keep(base.unionByName(
               base.selectExpr(s"id + $mOff AS id", "slice(toks, 2, size(toks)) AS toks"))
             .selectExpr("id", s"$sparkShingles AS sh")
-            .selectExpr("id", "sh", "CAST(size(sh) AS BIGINT) AS sz")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .selectExpr("id", "sh", "CAST(size(sh) AS BIGINT) AS sz"))
         // exclude shingle-less docs (< 3 tokens) before banding: their
         // 0/0 Jaccard NaN-aborts the ANSI cast once >cap share a
         // degenerate bucket (round-6 review; oracle-mirrored). ABOVE the
@@ -819,16 +832,14 @@ object Queries {
         // pair sources read the windowed projection.
         val w = org.apache.spark.sql.expressions.Window.partitionBy("b", "bucket")
         val wSub = org.apache.spark.sql.expressions.Window.partitionBy("b", "bucket", "sec")
-        val sigs = aug
+        val sigs = keep(aug
           .select(col("id"), GraftFunctions.minhash_bands(col("sh")).as("buckets"))
           .selectExpr("id", "buckets", "posexplode_outer(buckets) AS (b, bucket)")
           .selectExpr("id", "b", "bucket",
             "element_at(buckets, CAST((b + 1) % 4 AS INT) + 1) AS sec")
           .withColumn("n", count(lit(1)).over(w))
           .withColumn("rep", min("id").over(w))
-          .withColumn("m", count(lit(1)).over(wSub))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q15")(augCached, sigs)
+          .withColumn("m", count(lit(1)).over(wSub)))
         val small = sigs.filter(s"n <= $BucketCap")
         val s1 = small.selectExpr("id AS id_a", "b AS b_a", "bucket AS bucket_a")
         val s2 = small.selectExpr("id AS id_b", "b AS b_b", "bucket AS bucket_b")
@@ -1200,20 +1211,16 @@ object Queries {
     Q(
       "q24_ann_lsh",
       (s, dir) => {
-        GraftFunctions.registerAll(s)
-        // release-first (SwapCache.release scaladoc)
-        SwapCache.release("q24")
+        val keep = SwapCache.generation("q24")
         // persisted: the 32 hyperplane dot products per vector feed the
         // bucket self-join (both sides) AND the two re-rank joins — four
         // recomputes without the persist
-        val qqCached = t(s, dir, "embeddings")
+        val qqCached = keep(t(s, dir, "embeddings")
           .selectExpr(
             "vec_id",
             QuantSpark)
           .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
-          .selectExpr(Seq("vec_id", "qv", "nrm") ++ sTabs: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q24")(qqCached)
+          .select(Seq(col("vec_id"), col("qv"), col("nrm")) ++ sTabs: _*))
         // zero-norm guard (q16 scaladoc) ABOVE the persist: below it,
         // pushdown would re-evaluate the quantize+dot into the scan
         // filter (the q15 double-evaluation trap); here it reads the
@@ -1407,7 +1414,6 @@ object Queries {
     Q(
       "q26_embed_near_dup",
       (s, dir) => {
-        GraftFunctions.registerAll(s)
         // perturbed-copy ids live at +offset, where offset is the
         // smallest power of ten above max vec_id (min 100000), and the
         // SRP code length scales with the corpus (srpNearDupFor
@@ -1428,8 +1434,7 @@ object Queries {
             s"q26 oracle domain exceeded: offset=$offset bits=${lsh.bitsPerTable}" +
               " — the static oracle SQL assumes +100000 / 16-bit codes;" +
               " verify runs need a corpus of <= 16k vectors with ids < 100000")
-        // release-first (SwapCache.release scaladoc)
-        SwapCache.release("q26")
+        val keep = SwapCache.generation("q26")
         val base = t(s, dir, "embeddings")
           .selectExpr(
             "vec_id AS id",
@@ -1437,11 +1442,9 @@ object Queries {
         val aug = base.unionByName(
           base.selectExpr(s"id + $offset AS id", s"$perturbSpark AS qv"))
         // persisted for the same reason as q24's qq (4 consumers)
-        val qqCached = aug
+        val qqCached = keep(aug
           .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
-          .selectExpr(Seq("id", "qv", "nrm") ++ lsh.sTabs: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q26")(qqCached)
+          .select(Seq(col("id"), col("qv"), col("nrm")) ++ lsh.sTabs: _*))
         // zero-norm guard above the persist (q24 comment)
         val qq = qqCached.filter("nrm > 0")
         val sigs = qq.selectExpr("id", lsh.sStack)
@@ -1772,7 +1775,6 @@ object Queries {
   private val q34 = Q(
     "q34_ann_ivf",
     (s, dir) => {
-      GraftFunctions.registerAll(s)
       val k = 16
       val qq = t(s, dir, "embeddings")
         .selectExpr(
@@ -1792,10 +1794,12 @@ object Queries {
       // negation is exact and order-reversing, so the double compared is
       // the same one the oracle computes.
       val cellStructs = centroids.map { case (cid, cv, cnrm) =>
-        val lits = cv.map(v => s"${v}L").mkString("array(", ", ", ")")
-        s"named_struct('negc', -(CAST(dot_i64(qv, $lits) AS DOUBLE) / " +
-          s"(sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(${cnrm}L AS DOUBLE)))), 'cid', ${cid}L)"
-      }.mkString(", ")
+        val dot = GraftFunctions.dot_i64(col("qv"), array(cv.map(lit): _*))
+        struct(
+          (-(dot.cast("double") /
+            (sqrt(col("nrm").cast("double")) * sqrt(lit(cnrm).cast("double"))))).as("negc"),
+          lit(cid).as("cid"))
+      }
       // assign is deliberately NOT persisted although two consumers read
       // it: the probes side carries vec_id < 100, which Catalyst pushes
       // below the projection into the scan, so the expensive top2
@@ -1803,8 +1807,8 @@ object Queries {
       // materialize the corpus-wide (qv, nrm, top2) columns (and trip the
       // QueriesSpec no-InMemoryTableScan plan guard that pins the r2
       // assignment-blow-up fix)
-      val assign = qq.selectExpr("vec_id", "qv", "nrm",
-        s"slice(array_sort(array($cellStructs)), 1, 2) AS top2")
+      val assign = qq.select(col("vec_id"), col("qv"), col("nrm"),
+        slice(array_sort(array(cellStructs.toSeq: _*)), 1, 2).as("top2"))
       val cells = assign
         .selectExpr("top2[0].cid AS cid", "vec_id AS neighbor_id", "qv AS qb", "nrm AS nb")
       val probes = assign.filter(col("vec_id") < 100)
@@ -2116,20 +2120,20 @@ object Queries {
         // rows — 32 shards for a 400-row drain measured 2.4 s vs 1.3-1.5 s
         // at the derived count. ~100k state rows per shard before adding
         // shards; a 100 TB ingest derives thousands of shards from the
-        // same rule. The conf is restored after the drain (the partition
-        // count is latched into the NEW checkpoint at first batch, so a
-        // fresh-checkpoint run like this one is free to choose it).
-        val saved = s.conf.get("spark.sql.shuffle.partitions")
+        // same rule. The drain runs on a child session — its own SQL conf,
+        // the same SparkContext and cache — so the caller's conf is never
+        // written (the partition count is latched into the NEW checkpoint
+        // at first batch, so a fresh-checkpoint run like this one is free
+        // to choose it).
         val stateParts = math.max(2L, math.min(
           s.sparkContext.defaultParallelism.toLong, 2L * nDocs / 100000L + 1L)).toInt
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", stateParts)
-          graft.streaming.StreamingExtract.run(s, inDir,
-            base.resolve("out").toString, base.resolve("ck").toString,
-            CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
-            availableNow = true, dedup = true)
-            .awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+        val drain = s.newSession()
+        drain.conf.set("spark.sql.shuffle.partitions", stateParts)
+        graft.streaming.StreamingExtract.run(drain, inDir,
+          base.resolve("out").toString, base.resolve("ck").toString,
+          CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
+          availableNow = true, dedup = true)
+          .awaitTermination()
         auxDump(s.read.parquet(inDir).select("url"), "q40_in")
         val sinkRows = s.read.parquet(base.resolve("out").toString)
           .select("url", "kind", "total_word_count", "ok")
@@ -2209,18 +2213,16 @@ object Queries {
           require(mOff == 1000000L,
             s"q41 oracle domain exceeded: offset=$mOff (static oracle SQL " +
               "assumes +1000000; verify runs need doc ids < 1000000)")
-        // release-first (SwapCache.release scaladoc)
-        SwapCache.release("q41")
+        val keep = SwapCache.generation("q41")
         val base = t(s, dir, "documents")
           .selectExpr("doc_id AS id", s"$SparkToks AS toks")
         // grams feeds the posting explode (freq, prefix, gram-id table);
         // prefix feeds both sides of the candidate self-join; gsi feeds
         // both confirm sides
-        val grams = base.unionByName(
+        val grams = keep(base.unionByName(
             base.selectExpr(s"id + $mOff AS id", "slice(toks, 2, size(toks)) AS toks"))
           .selectExpr("id", s"$sparkBigrams AS gs")
-          .withColumn("sz", expr("size(gs)"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("sz", expr("size(gs)")))
         val posting = grams.selectExpr("id", "sz", "explode(gs) AS g")
         val freq = posting.groupBy("g").agg(count(lit(1)).as("df"))
         // dense integer gram ids, assigned in the global (df, g) prefix
@@ -2234,20 +2236,17 @@ object Queries {
         val ranked = posting.join(dict.select("g", "gid"), Seq("g"))
         val wDoc = org.apache.spark.sql.expressions.Window
           .partitionBy("id").orderBy("gid")
-        val prefix = ranked
+        val prefix = keep(ranked
           .withColumn("rn", row_number().over(wDoc))
           .filter("rn <= sz - ((9 * sz + 9) DIV 10) + 1")
-          .select("id", "sz", "gid", "rn")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select("id", "sz", "gid", "rn"))
         // per-doc gram-id SETS as sorted long arrays: the confirm stage's
         // input, 5x narrower than the string arrays and merge-walkable
         // (SortedOverlapI64 scaladoc). gid<->gram is a bijection, so the
         // overlap/union counts are exactly the string-set ones.
-        val gsi = ranked.groupBy("id")
+        val gsi = keep(ranked.groupBy("id")
           .agg(max("sz").as("sz"),
-            sort_array(collect_list(col("gid").cast("long"))).as("gsi"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q41")(grams, prefix, gsi)
+            sort_array(collect_list(col("gid").cast("long"))).as("gsi")))
         // candidate join with PPJoin's length + positional filters:
         // overlap bound alpha = ceil(9*(szA+szB)/19)
         val cand = prefix.selectExpr("id AS id_a", "sz AS sz_a", "gid", "rn AS rn_a")
@@ -2342,8 +2341,7 @@ object Queries {
           // chr(1) separator: spans are human text, so the control char
           // cannot occur and concatenation stays boundary-unambiguous
           "array_join(citation_spans, chr(1)) AS spans_str", "n_bytes")
-      // release-first (SwapCache.release scaladoc)
-      SwapCache.release("q42")
+      val keep = SwapCache.generation("q42")
       // the synthesized heavy-tail corpus feeds THREE actions (the plain
       // extract, byteWeightedRoute's per-url cost stats pass, and the
       // routed extract) — unpersisted, each one re-runs the full
@@ -2351,9 +2349,7 @@ object Queries {
       // persist only when reused AND recompute is expensive; both hold
       // here). ~25-40 MB at the fixture size; at scale this is the
       // pre-existing pages table both variants would read anyway.
-      val pages = ExtractPipeline.heavyTailPages(s, n, 32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      SwapCache.swap("q42")(pages.toDF())
+      val pages = keep(ExtractPipeline.heavyTailPages(s, n, 32))
       val plain = auxTable(s, dumpCols(
         ExtractPipeline.extractAndScore(pages, 32, target, bycatch).toDF()),
         "q42_plain")

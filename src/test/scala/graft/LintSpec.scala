@@ -66,26 +66,42 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("every persist in Queries.scala has a registered cache owner (source lint)") {
+  private def queriesSource(): Vector[String] = {
     val src = new java.io.File("src/main/scala/graft/queries/Queries.scala")
     assert(src.exists, s"lint source not found at ${src.getAbsolutePath} — " +
       "the forked test JVM's working directory moved off the repo root")
-    val lines = scala.util.Using.resource(
+    scala.util.Using.resource(
       scala.io.Source.fromFile(src, "UTF-8"))(_.getLines().toVector)
-    val persistIdx = lines.zipWithIndex.collect {
-      case (l, i) if l.contains(".persist(") => i
+  }
+
+  test("every persist in Queries.scala has a registered cache owner (source lint)") {
+    val lines = queriesSource()
+    // line span of an owner object: its `object` line to the first
+    // member-level closing brace after it
+    def body(owner: String): Range = {
+      val start = lines.indexWhere(_.contains(s"object $owner {"))
+      assert(start >= 0, s"cache owner `object $owner` not found in Queries.scala")
+      start to lines.indexWhere(_ == "  }", start)
     }
-    assert(persistIdx.nonEmpty, "expected persisted intermediates in Queries.scala")
-    persistIdx.foreach { i =>
-      // the owner registration FOLLOWS the persist (possibly after the
-      // comment blocks documenting the other persisted frames of the same
-      // query) — look 30 lines ahead, 5 behind
-      val window = lines.slice(math.max(0, i - 5),
-        math.min(lines.length, i + 30)).mkString("\n")
-      assert(window.contains("SwapCache.swap") || window.contains("cached ="),
-        s"persist at Queries.scala:${i + 1} has no SwapCache/Q15Result owner " +
-          "within 30 lines — an unowned persist leaks a cache generation per sweep")
+    val owners = body("SwapCache") ++ body("Q15Result")
+    val persists = lines.indices.filter(i => lines(i).contains(".persist("))
+    assert(persists.nonEmpty, "expected the cache owners to persist in Queries.scala")
+    persists.foreach { i =>
+      assert(owners.contains(i),
+        s"persist at Queries.scala:${i + 1} outside SwapCache/Q15Result — an " +
+          "unowned persist leaks a cache generation per sweep")
     }
+  }
+
+  test("Queries.scala bodies leave registry and conf state to the caller (source lint)") {
+    val lines = queriesSource()
+    def absent(token: String, why: String): Unit =
+      lines.zipWithIndex.foreach { case (l, i) =>
+        assert(!l.contains(token), s"Queries.scala:${i + 1} contains `$token`: $why")
+      }
+    absent("registerAll(", "query bodies build native functions as Columns " +
+      "(GraftFunctions.dot_i64 etc.); registering mutates the caller's function registry")
+    absent("s.conf.set(", "a query body must not write the caller's SQL conf")
   }
 
   test("repeated invocations of the persisting queries do not grow OR empty the cache") {
@@ -98,18 +114,18 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     val n1 = spark.sparkContext.getPersistentRDDs.size
     runAll()
     val n2 = spark.sparkContext.getPersistentRDDs.size
-    // SwapCache swaps generations and Q15Result reuses its hit, so a
+    // SwapCache replaces generations and Q15Result reuses its hit, so a
     // second sweep must not add blocks; growth means a persist lost its
     // owner (each unowned persist leaks one generation per sweep)
     assert(n2 <= n1, s"persisted RDDs grew $n1 -> $n2 across a repeat sweep")
     // ...and must not silently UNcache either: a rebuilt generation whose
     // plan equals the previous one dedups its persist() into the old
-    // CacheManager entry, which a persist-then-swap order then removes BY
-    // PLAN — leaving runs 2+ fully uncached and recomputing the whole
+    // CacheManager entry, which a persist-then-release order then removes
+    // BY PLAN — leaving runs 2+ fully uncached and recomputing the whole
     // chain per consumer (measured 4.4 s -> 40 s on q41 re-runs; the
-    // release-first order in the query bodies is what this pins)
+    // release-first order of SwapCache.generation is what this pins)
     assert(n2 > 0,
-      "second sweep left ZERO persisted RDDs — a swap-after-persist killed " +
-        "the shared CacheManager entry (see SwapCache.release scaladoc)")
+      "second sweep left ZERO persisted RDDs — a release-after-persist killed " +
+        "the shared CacheManager entry (see SwapCache.generation scaladoc)")
   }
 }

@@ -107,6 +107,20 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.getAs[String]("kind")).toSet == Set("html", "pdf"))
   }
 
+  test("q24/q26/q34 leave a fresh session's function registry untouched, same results") {
+    // the native dot_i64 is built as a Column, so a caller's session
+    // never gains a registered function from running a query
+    val fresh = spark.newSession()
+    def rows(s: org.apache.spark.sql.SparkSession, name: String) =
+      Queries.all.find(_.name == name).get.fn(s, sf).collect().map(_.toString).sorted.toSeq
+    Seq("q24_ann_lsh", "q26_embed_near_dup", "q34_ann_ivf").foreach { name =>
+      val got = rows(fresh, name)
+      assert(!fresh.catalog.functionExists("dot_i64"),
+        s"$name registered dot_i64 in the caller's session")
+      assert(got.nonEmpty && got == rows(spark, name), s"$name: fresh-session result differs")
+    }
+  }
+
   test("q42 byte-weighted routing is result-invisible on the heavy-tail corpus") {
     // the invariant the oracle's WHERE guard asserts, pinned here too so
     // a violation fails fast in sbt (not only as a driver row mismatch)
